@@ -6,7 +6,9 @@ bytes -> st_join -> decode+warp+temporal-agg cube -> reduce) plus the
 representative operator queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS], and prints ONE JSON line:
   {"metric": ..., "value": <suite sec>, "unit": "sec",
-   "queries": {name: sec}, "sf": ..., "images_per_sec": ...}
+   "queries": {name: sec}, "sf": ..., "images_per_sec": ...,
+   "images_per_sec_codec": ..., "statistic": "min of 2", "trials": 2}
+Both images/sec rates are the fastest of ``trials`` pipeline runs.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "200000"))
+TRIALS = 2  # pipeline runs behind each images/sec rate (the fastest counts)
 
 BENCH_QUERIES = [
     "stjoin_rows", "stjoin_s2", "cube_mean", "cube_median", "cube_count_images",
@@ -184,7 +187,7 @@ def main() -> None:
     t_suite = time.time()
 
     runs = []
-    for _ in range(2):  # single-machine timing is noisy; report both, rate = best
+    for _ in range(TRIALS):  # single-machine timing is noisy; rate = best
         t0 = time.time()
         rows = images_pipeline(spark, N_IMAGES, path=path)
         runs.append(time.time() - t0)
@@ -197,7 +200,7 @@ def main() -> None:
     # and this number rises toward the memcpy flagship)
     cpath = materialize_images_codec(spark, N_CODEC)
     cruns = []
-    for _ in range(2):
+    for _ in range(TRIALS):
         t0 = time.time()
         images_pipeline(spark, N_CODEC, path=cpath)
         cruns.append(time.time() - t0)
@@ -218,6 +221,8 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "images_per_sec": round(N_IMAGES / pipeline_s, 1),
         "images_per_sec_codec": round(N_CODEC / codec_s, 1),
+        "statistic": f"min of {TRIALS}",
+        "trials": TRIALS,
         "n_images": N_IMAGES,
         "n_images_codec": N_CODEC,
         "cpus": CPUS,

@@ -203,6 +203,21 @@ def decode(data: bytes, fmt: str | None = None) -> np.ndarray:
     return decode_png(bytes(data))
 
 
+def decode_batch(datas) -> list:
+    """decode() over a batch of payloads, results in input order.  The
+    baseline JPEGs among them go through jpegbase.decode_jpeg_batch, which
+    decodes payloads sharing a header in one lockstep pass; every result
+    is byte-identical to decode() of its payload."""
+    datas = list(datas)
+    jpeg = [i for i, d in enumerate(datas) if d[:2] == b"\xff\xd8"]
+    got = {}
+    if jpeg:
+        from .sources.jpegbase import decode_jpeg_batch
+
+        got = dict(zip(jpeg, decode_jpeg_batch([datas[i] for i in jpeg])))
+    return [got[i] if i in got else decode(d) for i, d in enumerate(datas)]
+
+
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)

@@ -1014,10 +1014,13 @@ def _scan_batch_flat(
     The per-image loop spends ~30 small numpy calls per image — at 200k
     images that Python overhead dwarfs the actual arithmetic (guide §4.2:
     hand whole batches to vectorized kernels). Here every step runs once
-    per BATCH over flattened (image, cell) arrays; only decode_fn (a real
-    codec) and value_fn (a user callable) remain per-image. Each expression
-    mirrors the loop's operation order exactly so emitted rows are
-    bit-identical, in the same order (pinned by tests/test_cells_long_fast).
+    per BATCH over flattened (image, cell) arrays. The default decode_fn
+    decodes the whole batch through codecs.decode_batch, whose baseline
+    JPEGs take one lockstep numpy Huffman pass (byte-identical to decoding
+    them one by one); a custom decode_fn and value_fn (user callables) are
+    still called once per image. Each expression mirrors the loop's
+    operation order exactly so emitted rows are bit-identical, in the same
+    order (pinned by tests/test_cells_long_fast).
     """
     empty = pd.DataFrame(
         {"it": pd.Series([], dtype="int32"),
@@ -1059,8 +1062,9 @@ def _scan_batch_flat(
         Ws = np.empty(len(sel), np.int64)
         offs = np.empty(len(sel), np.int64)
         off = 0
-        for j, k in enumerate(sel):
-            raw = decode_fn(a_bytes[k], a_fmt[k])
+        raws = (codecs.decode_batch(a_bytes[sel]) if decode_fn is default_decode
+                else (decode_fn(a_bytes[k], a_fmt[k]) for k in sel))
+        for j, raw in enumerate(raws):
             Hs[j], Ws[j], offs[j] = raw.shape[0], raw.shape[1], off
             off += raw.shape[0] * raw.shape[1]
             for b in range(nb):
@@ -1162,8 +1166,9 @@ def build_cells_long(
     Preferred when footprints cover FEW cells (coarse cubes over many
     images: contribution rows ≈ images x cells/image). The chunk-kernel path
     (build_cells) wins when one image covers MANY cells (fine cubes), where
-    dense plane arithmetic beats row explosion — build_cube(strategy=...)
-    picks by the footprint-to-cell-area ratio.
+    dense plane arithmetic beats row explosion. build_cube(strategy="auto")
+    picks by aggregation, not by footprint size: this path for every
+    aggregation in _LONG_AGGS, the chunk kernel for the rest.
     """
     agg = view.aggregation
     if agg not in _LONG_AGGS:

@@ -40,11 +40,24 @@ can decode real-world bytes with zero native dependencies.
 Scale shape: pure-numpy per-payload work inside mapInPandas at chunk
 grain — embarrassingly parallel, no shuffle, no driver involvement; at
 100 TB it rides the existing scan exactly like the PNG/JP2/TIFF codecs.
+A single payload takes the scalar decoder (decode_jpeg).  A batch
+(decode_jpeg_batch; codecs.decode_batch in the cube scan) groups its
+baseline single-scan payloads by header signature and decodes each group
+in lockstep: one numpy step decodes one Huffman symbol for every payload
+of the group, and dequantisation and the IDCT run on the blocks of many
+payloads at once.  The result is byte-identical to the scalar decoder, which stays
+the oracle (tests/test_jpegbase.py) and decodes everything the lockstep
+pass does not take: progressive, restart-interval and multi-scan
+streams, groups below the measured crossover, and malformed payloads,
+whose errors it raises.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 import struct
+from typing import NamedTuple
 
 import numpy as np
 
@@ -298,15 +311,28 @@ for _u in range(8):
         _DCT_M[_u, _x] = 0.5 * _a * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 del _u, _a, _x
 
+# Contraction paths, searched once here instead of on every call
+# (optimize=True re-runs the search, ~35 us a call).  The greedy search
+# picks the same path for every block count n — the n-block operand
+# against the left matrix first — so passing it keeps every result
+# byte-identical, and a batch of blocks transforms exactly as the same
+# blocks one image at a time.
+_FDCT_PATH = np.einsum_path("ux,nxy,vy->nuv", _DCT_M, np.zeros((2, 8, 8)),
+                            _DCT_M, optimize=True)[0]
+_IDCT_PATH = np.einsum_path("xu,nuv,yv->nxy", _DCT_M.T, np.zeros((2, 8, 8)),
+                            _DCT_M.T, optimize=True)[0]
+
 
 def fdct_blocks(blocks: np.ndarray) -> np.ndarray:
     """(n, 8, 8) spatial (level-shifted) -> (n, 8, 8) DCT coefficients."""
-    return np.einsum("ux,nxy,vy->nuv", _DCT_M, blocks, _DCT_M, optimize=True)
+    return np.einsum("ux,nxy,vy->nuv", _DCT_M, blocks, _DCT_M,
+                     optimize=_FDCT_PATH)
 
 
 def idct_blocks(coefs: np.ndarray) -> np.ndarray:
     """(n, 8, 8) DCT coefficients -> (n, 8, 8) spatial samples."""
-    return np.einsum("xu,nuv,yv->nxy", _DCT_M.T, coefs, _DCT_M.T, optimize=True)
+    return np.einsum("xu,nuv,yv->nxy", _DCT_M.T, coefs, _DCT_M.T,
+                     optimize=_IDCT_PATH)
 
 
 def quality_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
@@ -374,6 +400,8 @@ class _HuffDecoder:
             lut_sym[lo:hi] = sym
             lut_len[lo:hi] = ln
         self.lut = list(zip(lut_sym.tolist(), lut_len.tolist()))
+        self.lut_sym, self.lut_len = lut_sym, lut_len
+        self.lockstep = {}  # is_ac -> _lockstep_lut arrays, built on demand
 
 
 # ---------------------------------------------------------------------------
@@ -1081,6 +1109,27 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 
 
 def _decode_jpeg(data: bytes) -> np.ndarray:
+    decoded = {}  # comp index -> (nblocks, 64) int coefs in block raster
+
+    def on_scan(pos, frame, scan, dc_tabs, ac_tabs, ri, ss, se, ah, al):
+        if frame["prog"]:
+            return _decode_scan_prog(data, pos, frame, scan, dc_tabs, ac_tabs,
+                                     ri, decoded, ss, se, ah, al)
+        return _decode_scan(data, pos, frame, scan, dc_tabs, ac_tabs, ri,
+                            decoded)
+
+    frame, qtabs = _parse_markers(data, on_scan)
+    if frame is None or len(decoded) < len(frame["comps"]):
+        raise ValueError("incomplete JPEG: missing scan data")
+    return _assemble(frame, decoded, qtabs)
+
+
+def _parse_markers(data: bytes, on_scan):
+    """The marker loop both decode paths share: DQT, DHT, SOFn and DRI are
+    read here; every SOS calls ``on_scan(pos, frame, scan, dc_tabs,
+    ac_tabs, ri, ss, se, ah, al)`` with ``pos`` at the first entropy-coded
+    byte, and ``on_scan`` returns the position of the marker that ends the
+    segment.  Returns (frame, qtabs) at EOI."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -1089,7 +1138,6 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     ac_tabs = {}
     ri = 0
     frame = None
-    decoded = {}  # comp index -> (nblocks, 64) int coefs in block raster
     while True:
         while data[pos] != 0xFF:
             pos += 1
@@ -1151,18 +1199,11 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 scan.append((ci, tdta >> 4, tdta & 15))
             ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
             ahal = seg[3 + 2 * ns]
-            if frame["prog"]:
-                pos = _decode_scan_prog(data, nxt, frame, scan, dc_tabs,
-                                        ac_tabs, ri, decoded, ss, se,
-                                        ahal >> 4, ahal & 15)
-            else:
-                pos = _decode_scan(data, nxt, frame, scan, dc_tabs, ac_tabs,
-                                   ri, decoded)
+            pos = on_scan(nxt, frame, scan, dc_tabs, ac_tabs, ri, ss, se,
+                          ahal >> 4, ahal & 15)
             continue
         pos = nxt
-    if frame is None or len(decoded) < len(frame["comps"]):
-        raise ValueError("incomplete JPEG: missing scan data")
-    return _assemble(frame, decoded, qtabs)
+    return frame, qtabs
 
 
 def _comp_store(decoded, frame, ci):
@@ -1490,28 +1531,360 @@ def _huff_val(br: _BitReader, tbl: _HuffDecoder) -> int:
 
 
 def _assemble(frame, decoded, qtabs):
-    h, w = frame["h"], frame["w"]
     comps = frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    planes = []
-    for ci, c in enumerate(comps):
-        qz, bw_, bh_ = decoded[ci]
-        qz = np.asarray(qz, dtype=np.int64)
-        q = qtabs[c["tq"]]
+    nats = []
+    for ci in range(len(comps)):
+        qz = np.asarray(decoded[ci][0], dtype=np.int64)
         nat = np.zeros_like(qz)
         nat[:, ZIGZAG] = qz  # inverse zigzag
+        nats.append(nat[None])
+    return _pixels((frame["h"], frame["w"]),
+                   tuple((c["h"], c["v"]) for c in comps), nats,
+                   [qtabs[c["tq"]] for c in comps])[0]
+
+
+def _pixels(size, samp, nats, qts) -> np.ndarray:
+    """Per component (lanes, blocks in raster order, 64) natural-order
+    int64 coefficients -> (lanes, h, w, c) uint8: dequantise, IDCT, crop,
+    box-upsample, colour transform.  Both decoders end here, so a batch
+    of lanes and one payload go through the same arithmetic."""
+    h, w = size
+    hmax = max(hi for hi, _ in samp)
+    vmax = max(vi for _, vi in samp)
+    mcux = -(-w // (8 * hmax))
+    mcuy = -(-h // (8 * vmax))
+    planes = []
+    for (hi, vi), nat, q in zip(samp, nats, qts):
+        nl = nat.shape[0]
         coefs = (nat * q).reshape(-1, 8, 8).astype(np.float64)
         spatial = idct_blocks(coefs) + 128.0
-        cw = -(-w * c["h"] // hmax)
-        chh = -(-h * c["v"] // vmax)
-        plane = spatial.reshape(bh_, bw_, 8, 8).transpose(0, 2, 1, 3).reshape(
-            bh_ * 8, bw_ * 8)[:chh, :cw]
-        fy, fx = vmax // c["v"], hmax // c["h"]
+        bw_, bh_ = mcux * hi, mcuy * vi
+        cw = -(-w * hi // hmax)
+        chh = -(-h * vi // vmax)
+        plane = spatial.reshape(nl, bh_, bw_, 8, 8).transpose(0, 1, 3, 2, 4).reshape(
+            nl, bh_ * 8, bw_ * 8)[:, :chh, :cw]
+        fy, fx = vmax // vi, hmax // hi
         if fy > 1 or fx > 1:
-            plane = np.repeat(np.repeat(plane, fy, axis=0), fx, axis=1)
-        planes.append(plane[:h, :w])
+            plane = np.repeat(np.repeat(plane, fy, axis=1), fx, axis=2)
+        planes.append(plane[:, :h, :w])
     img = np.stack(planes, axis=-1)
-    if len(comps) == 3:
+    if len(samp) == 3:
         img = _ycbcr_to_rgb(img)
     return np.clip(np.round(img), 0, 255).astype(np.uint8)
+
+
+# ---------------------------------------------------------------------------
+# Lockstep batch decoder: one Huffman symbol for every payload per numpy step
+# ---------------------------------------------------------------------------
+
+# Fewest payloads sharing one header signature that take the lockstep
+# pass; smaller groups take the scalar decoder.  A pass costs one step
+# per symbol of its longest payload whatever its width, so the crossover
+# is a lane count.  Measured on 48x48 2-band q95 payloads (~1950 symbols
+# each) on a 4-vCPU x86 VM, median speed-up of the pass over the scalar
+# decoder: 0.69x at 16 payloads, 1.01x at 24, 1.20x at 32, 1.93x at 64,
+# 3.9x at 256.
+_LOCKSTEP_MIN = 32
+# Most 8x8 blocks and entropy-coded bytes in one pass (bigger groups are
+# split evenly): bound the int32 coefficient store at 8 MB and the window
+# words (8 bytes per byte) at 16 MB.
+_LOCKSTEP_BLOCKS = 1 << 15
+_LOCKSTEP_BYTES = 1 << 21
+# Log entries (lanes x steps) kept before their coefficient values are
+# read back and scattered (512 KB of log).
+_LOCKSTEP_FLUSH = 1 << 14
+# Most blocks per call of _pixels (512 KB per float64 operand;
+# at 48x48 2-band this is also faster than bigger chunks).
+_ASSEMBLE_BLOCKS = 1 << 10
+
+
+def decode_jpeg_batch(payloads) -> list:
+    """JPEG payloads -> one (h, w, c) uint8 array each, in input order, each
+    byte-identical to decode_jpeg(payload).
+
+    A payload can take the lockstep pass when its header (read by the same
+    marker loop as decode_jpeg) has one sequential scan over all
+    components, no restart interval, 1..4 components and sampling factors
+    1..2.  Such payloads group by header signature: size, sampling, scan
+    order, Huffman and quantization tables.  Each group of at least
+    _LOCKSTEP_MIN payloads is decoded by _lockstep_pass.  Everything else
+    — other frames, smaller groups, payloads that fail inside the pass —
+    goes through decode_jpeg, which also raises the payload's own error."""
+    groups: dict = {}
+    for i, p in enumerate(payloads):
+        data = bytes(p)
+        hdr = _lockstep_header(data)
+        if hdr is not None:
+            groups.setdefault(hdr[0], []).append((i, data, hdr[1]))
+    got = {}
+    for members in groups.values():
+        h0 = members[0][2]
+        nblocks = len(_block_order(h0.size, h0.samp, h0.order)[0])
+        nbytes = sum(hdr.end - hdr.start for _, _, hdr in members)
+        n_pass = max(-(-len(members) * nblocks // _LOCKSTEP_BLOCKS),
+                     -(-nbytes // _LOCKSTEP_BYTES))
+        if len(members) // n_pass < _LOCKSTEP_MIN:
+            continue
+        cuts = [len(members) * k // n_pass for k in range(n_pass + 1)]
+        for a, b in zip(cuts, cuts[1:]):
+            got.update(_lockstep_pass(members[a:b]))
+    return [got[i] if i in got else decode_jpeg(p)
+            for i, p in enumerate(payloads)]
+
+
+_MARKER = re.compile(b"\xff[^\x00]")
+
+
+def _segment_end(data: bytes, pos: int) -> int:
+    """Position of the marker that ends the entropy-coded segment starting
+    at ``pos``: the first 0xFF not followed by a stuffed 0x00, where the
+    scalar decoders' bit readers stop too."""
+    m = _MARKER.search(data, pos)
+    if m is None:
+        raise ValueError("entropy-coded segment without a closing marker")
+    return m.start()
+
+
+class _Header(NamedTuple):
+    size: tuple  # (h, w)
+    samp: tuple  # per frame component (H, V)
+    order: tuple  # frame component index of each scan component
+    tabs: tuple  # per scan component (DC, AC) _HuffDecoder
+    qts: tuple  # per frame component natural-order quantization table
+    start: int  # entropy-coded segment [start, end)
+    end: int
+
+
+def _lockstep_header(data: bytes):
+    """(group key, _Header) of a payload the lockstep pass can take, else
+    None — also for any payload the marker loop rejects, whose error the
+    scalar decoder raises."""
+    scans = []
+
+    def on_scan(pos, frame, scan, dc_tabs, ac_tabs, ri, ss, se, ah, al):
+        tabs = tuple((dc_tabs[td], ac_tabs[ta]) for _, td, ta in scan)
+        end = _segment_end(data, pos)
+        scans.append((frame, scan, ri, tabs, pos, end))
+        return end
+
+    try:
+        frame, qtabs = _parse_markers(data, on_scan)
+    except (ValueError, IndexError, KeyError, StopIteration, struct.error,
+            NotImplementedError):
+        return None  # decode_jpeg raises this payload's error
+    if len(scans) != 1:
+        return None
+    sframe, scan, ri, tabs, start, end = scans[0]
+    comps = frame["comps"]
+    order = tuple(ci for ci, _, _ in scan)
+    samp = tuple((c["h"], c["v"]) for c in comps)
+    if (
+        sframe is not frame or frame["prog"] or ri
+        or not 1 <= len(comps) <= 4 or sorted(order) != list(range(len(comps)))
+        or frame["h"] < 1 or frame["w"] < 1
+        or any(hv not in ((1, 1), (1, 2), (2, 1), (2, 2)) for hv in samp)
+        or (len(comps) == 1 and samp[0] != (1, 1))
+        or any(c["tq"] not in qtabs for c in comps)
+        # DC sizes above 16 would overflow the 16-bit value field
+        or any(max(dc.vals, default=0) > 16 for dc, _ in tabs)
+    ):
+        return None
+    qts = tuple(qtabs[c["tq"]] for c in comps)
+    size = (frame["h"], frame["w"])
+    key = (size, samp, order, tabs, tuple(q.tobytes() for q in qts))
+    return key, _Header(size, samp, order, tabs, qts, start, end)
+
+
+@functools.lru_cache(maxsize=64)
+def _block_order(size, samp, order):
+    """Block sequence of an interleaved scan (MCU by MCU, each component's
+    hi x vi blocks in scan order): per decoded block its scan position, and
+    per frame component the decoded-block indices in that component's
+    block-raster (storage) order."""
+    h, w = size
+    hmax = max(hi for hi, _ in samp)
+    vmax = max(vi for _, vi in samp)
+    mcux = -(-w // (8 * hmax))
+    mcuy = -(-h // (8 * vmax))
+    bpos, bstore = [], []
+    for my in range(mcuy):
+        for mx in range(mcux):
+            for si, ci in enumerate(order):
+                hi, vi = samp[ci]
+                for v in range(vi):
+                    for u in range(hi):
+                        bpos.append(si)
+                        bstore.append((my * vi + v) * mcux * hi + mx * hi + u)
+    bpos = np.array(bpos, dtype=np.int64)
+    bstore = np.array(bstore, dtype=np.int64)
+    perms = []
+    for ci in range(len(samp)):
+        mine = np.nonzero(bpos == order.index(ci))[0]
+        perms.append(mine[np.argsort(bstore[mine], kind="stable")])
+    return bpos, perms
+
+
+def _lockstep_lut(dec: _HuffDecoder, is_ac: bool):
+    """Arrays over the 16-bit peek of one table for the lockstep pass:
+    total bits (code + value), write offset from the current coefficient,
+    coefficient advance, code length, right shift that leaves the value
+    bits, and the EXTEND (F.2.2.1) constants 2**(s-1) and 2**s - 1 (both
+    0 when the symbol has no value bits).  Invalid codes get write offset
+    64, which always trips the pass's run-past-block check."""
+    t = dec.lockstep.get(is_ac)
+    if t is None:
+        sym, ln = dec.lut_sym, dec.lut_len
+        valid = sym >= 0
+        if is_ac:
+            s = np.where(valid, sym & 15, 0)
+            pre = np.where(s > 0, sym >> 4, 0)
+            adv = np.where(s > 0, pre + 1, np.where(sym == 0xF0, 16, 64))
+        else:
+            s = np.where(valid, sym, 0)
+            pre = np.zeros_like(s)
+            adv = np.ones_like(s)
+        pre = np.where(valid, pre, 64)
+        t = dec.lockstep[is_ac] = _lut_arrays(ln + s, pre, adv, ln, s)
+    return t
+
+
+def _lut_arrays(nb, pre, adv, ln, s):
+    s = np.asarray(s)
+    return (tuple(np.broadcast_to(a, s.shape).astype(np.uint8)
+                  for a in (nb, pre, adv, ln, 64 - s))
+            + tuple(a.astype(np.uint16) for a in ((1 << s) >> 1, (1 << s) - 1)))
+
+
+# Peek table of a lane that has decoded its last block: no bits, no
+# value, write offset 64 (which stops the lane).
+_DONE_LUT = _lut_arrays(0, 64, 0, 0, np.zeros(1 << 16, dtype=np.int64))
+
+
+def _be_words(a: np.ndarray) -> np.ndarray:
+    """Big-endian uint64 of the 8 bytes starting at every offset of ``a``
+    (len(a) - 7 words)."""
+    n = len(a) - 7
+    words = np.empty(n, dtype=np.uint64)
+    for r in range(8):
+        cnt = len(range(r, n, 8))
+        words[r::8] = a[r:r + 8 * cnt].view(">u8")
+    return words
+
+
+def _lockstep_pass(members) -> dict:
+    """Decode payloads of one header signature together.  Every lane (one
+    payload) holds a bit position P and a coefficient slot S (block*64 +
+    zigzag index); each numpy step decodes one Huffman symbol for every
+    live lane from a 64-bit window at its P, through the peek tables of
+    the table its slot selects.  The same errors the scalar _decode_scan
+    raises — invalid code, reading past the segment's marker, AC run past
+    the block end — drop the lane instead; it is left to the scalar
+    decoder, and nothing it read past its own bytes reaches any output."""
+    size, samp, order, tabs, qts = members[0][2][:5]  # shared by the group
+    bpos, perms = _block_order(size, samp, order)
+    nblocks = len(bpos)
+    nslots = nblocks * 64
+    nl = len(members)
+
+    # stacked peek tables; per slot the table base (table id << 16)
+    luts: list = []
+    tid: dict = {}
+    dc_ids, ac_ids = [], []
+    for dc, ac in tabs:
+        for dec, is_ac, ids in ((dc, False, dc_ids), (ac, True, ac_ids)):
+            k = (id(dec), is_ac)
+            if k not in tid:
+                tid[k] = len(luts)
+                luts.append(_lockstep_lut(dec, is_ac))
+            ids.append(tid[k])
+    luts.append(_DONE_LUT)
+    NB, PRE, ADV, LN, RSH, HALF, MASK = (np.concatenate(c) for c in zip(*luts))
+    # slot -> natural-order position of its coefficient in the lane's store
+    NAT = np.arange(nslots) & ~63 | ZIGZAG[np.arange(nslots) & 63]
+    tsel = np.repeat(np.array(ac_ids, dtype=np.uint64)[bpos], 64).reshape(nblocks, 64)
+    tsel[:, 0] = np.array(dc_ids, dtype=np.uint64)[bpos]
+    # slot nslots (past the last block) selects the done table
+    TSEL = np.append(tsel.ravel(), np.uint64(len(luts) - 1)) << np.uint64(16)
+    NXT = np.minimum((np.arange(nslots + 1) | 63) + 1, nslots)  # next block start
+
+    # de-stuffed segments, each followed by 8 bytes of 1-bits (the scalar
+    # reader's fill value), as big-endian words at every byte offset
+    segs = [data[hdr.start:hdr.end].replace(b"\xff\x00", b"\xff")
+            for _, data, hdr in members]
+    lens = np.array([len(s) for s in segs], dtype=np.int64)
+    base = np.concatenate(([0], np.cumsum(lens + 8)[:-1]))
+    W = _be_words(np.frombuffer(
+        b"".join(s + b"\xff" * 8 for s in segs) + b"\xff" * 8, dtype=np.uint8))
+
+    coef = np.zeros(nl * nslots, dtype=np.int32)  # natural order per block
+    ok = np.ones(nl, dtype=bool)
+    logs: list = []
+
+    def flush():
+        # values of the logged symbols, read from the window each step
+        # already gathered: code bits off the top, then the value bits
+        L, win, S, idx = (np.concatenate(c) for c in zip(*logs))
+        logs.clear()
+        keep = HALF[idx] > 0  # symbols with value bits
+        if not ok.all():
+            keep &= ok[L]
+        at = np.flatnonzero(keep)
+        L, win, S, idx = L[at], win[at], S[at], idx[at]
+        v = ((win << LN[idx]) >> RSH[idx]).view(np.int64)
+        v = np.where(v < HALF[idx], v - MASK[idx], v)  # EXTEND (F.2.2.1)
+        coef[L * nslots + NAT[S + PRE[idx]]] = v
+
+    # Constant operands as arrays: a numpy op with a Python-int operand
+    # costs 2-4x one with two arrays at these lane counts.
+    c3, c7, c48 = (np.full(nl, c, dtype=np.uint64) for c in (3, 7, 48))
+    L = np.arange(nl)
+    P = (base * 8).astype(np.uint64)
+    END = ((base + lens) * 8).astype(np.uint64)
+    S = np.zeros(nl, dtype=np.int64)
+    logged = 0
+    while L.size:
+        win = W[P >> c3] << (P & c7)
+        idx = TSEL[S] | (win >> c48)
+        logs.append((L, win, S, idx))
+        logged += L.size
+        nxt = NXT[S]
+        slot = S + PRE[idx]
+        P = P + NB[idx]
+        S0, S = S, np.minimum(S + ADV[idx], nxt)
+        stop = (P > END) | (slot >= nxt)
+        if stop.any():
+            # a lane one step past its last block ran the done table,
+            # whose write offset stopped it: finished, not failed
+            ok[L[stop & (S0 != nslots)]] = False
+            keep = ~stop
+            L, P, S, END = L[keep], P[keep], S[keep], END[keep]
+            n = L.size
+            c3, c7, c48 = c3[:n], c7[:n], c48[:n]
+        if logged >= _LOCKSTEP_FLUSH:
+            flush()
+            logged = 0
+    if logs:
+        flush()
+    if not ok.any():
+        return {}
+
+    # DC: prefix sums of the differences, per component in decode order
+    coef = coef.reshape(nl, nblocks, 64)
+    dc = coef[:, :, 0].astype(np.int64)
+    for si in range(len(order)):
+        sel = np.nonzero(bpos == si)[0]
+        dc[:, sel] = np.cumsum(dc[:, sel], axis=1)
+    # pixels in lane chunks of at most _ASSEMBLE_BLOCKS blocks, which
+    # bounds the float64 temporaries of the IDCT and colour transform
+    out = {}
+    step = max(1, _ASSEMBLE_BLOCKS // nblocks)
+    for a in range(0, nl, step):
+        nats = []
+        for perm in perms:  # each component's blocks in raster order
+            nat = coef[a:a + step, perm].astype(np.int64)
+            nat[:, :, 0] = dc[a:a + step, perm]
+            nats.append(nat)
+        img = _pixels(size, samp, nats, qts)
+        out.update((members[j][0], img[j - a])
+                   for j in range(a, min(a + step, nl)) if ok[j])
+    return out

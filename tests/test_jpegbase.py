@@ -6,6 +6,8 @@ double-sum DCT, brute-force prefix-free check, structural bitstream scan),
 not just round-tripped through itself.
 """
 
+from unittest import mock
+
 import numpy as np
 import pytest
 
@@ -22,6 +24,32 @@ def _rgb(h=40, w=56):
     return np.stack(
         [(xx * 3) % 256, (yy * 5) % 256, ((xx + yy) * 2) % 256], -1
     ).astype(np.uint8)
+
+
+def _variants(img, n=jb._LOCKSTEP_MIN):
+    """n distinct images of img's shape: encoded with the same options they
+    share one header signature (size, sampling, tables)."""
+    return [np.roll(img, 3 * k, axis=1) ^ np.uint8(k) for k in range(n)]
+
+
+def _lockstep_only(payloads) -> dict:
+    """{index: array} for the payloads decode_jpeg_batch decodes in its
+    lockstep pass: the scalar decode_jpeg it falls back to is stubbed."""
+    with mock.patch.object(jb, "decode_jpeg", lambda p: None):
+        got = jb.decode_jpeg_batch(payloads)
+    return {i: a for i, a in enumerate(got) if a is not None}
+
+
+def _assert_batch_identical(payloads, lockstep):
+    """decode_jpeg_batch gives decode_jpeg's array for every payload, byte
+    for byte, and the lockstep pass decoded ``lockstep`` of them."""
+    got = jb.decode_jpeg_batch(payloads)
+    assert len(got) == len(payloads)
+    for g, p in zip(got, payloads):
+        want = jb.decode_jpeg(p)
+        assert g.dtype == want.dtype and g.shape == want.shape
+        np.testing.assert_array_equal(g, want)
+    assert len(_lockstep_only(payloads)) == lockstep
 
 
 # ---------------------------------------------------------------------------
@@ -52,6 +80,25 @@ def test_fdct_matches_direct_double_sum():
         np.testing.assert_allclose(fast[i], _fdct_direct(blocks[i]), atol=1e-9)
     # inverse is the exact adjoint: round trip to fp precision
     np.testing.assert_allclose(jb.idct_blocks(fast), blocks, atol=1e-9)
+
+
+@pytest.mark.parametrize("n", [1, 7, 36, 4096])
+def test_dct_paths_match_the_per_call_search(n):
+    """fdct/idct_blocks pass a contraction path found once at import; it is
+    the path optimize=True finds for every block count, so the arithmetic,
+    and every decoded byte, is what the per-call search gave."""
+    blocks = np.random.default_rng(n).uniform(-128, 127, (n, 8, 8))
+    m, mt = jb._DCT_M, jb._DCT_M.T
+    assert np.einsum_path("ux,nxy,vy->nuv", m, blocks, m,
+                          optimize=True)[0] == jb._FDCT_PATH
+    assert np.einsum_path("xu,nuv,yv->nxy", mt, blocks, mt,
+                          optimize=True)[0] == jb._IDCT_PATH
+    np.testing.assert_array_equal(
+        jb.fdct_blocks(blocks),
+        np.einsum("ux,nxy,vy->nuv", m, blocks, m, optimize=True))
+    np.testing.assert_array_equal(
+        jb.idct_blocks(blocks),
+        np.einsum("xu,nuv,yv->nxy", mt, blocks, mt, optimize=True))
 
 
 def test_zigzag_is_a_permutation_with_spec_anchors():
@@ -146,6 +193,8 @@ def test_roundtrip_gray(shape):
     dec = jb.decode_jpeg(jb.encode_jpeg(img))
     assert dec.shape == (h, w, 1)
     assert codecs.psnr(img[:, :, None], dec) >= 40.0
+    _assert_batch_identical([jb.encode_jpeg(v) for v in _variants(img)],
+                            jb._LOCKSTEP_MIN)
 
 
 def test_roundtrip_two_band_scene_psnr40():
@@ -164,6 +213,8 @@ def test_roundtrip_multiband(nc):
     dec = jb.decode_jpeg(jb.encode_jpeg(img))
     assert dec.shape == img.shape
     assert codecs.psnr(img, dec) >= 40.0
+    _assert_batch_identical([jb.encode_jpeg(v) for v in _variants(img)],
+                            jb._LOCKSTEP_MIN)
 
 
 def test_roundtrip_rgb_444_and_420():
@@ -588,6 +639,216 @@ def test_translate_jpeg_rejects_nan(spark):
 
 
 # ---------------------------------------------------------------------------
+# Lockstep batch decode (decode_jpeg_batch) vs the scalar decoder
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("case", [
+    "scene", "rgb444", "rgb420", "rgb422", "rgb420_odd", "rgb422_odd",
+    "band4_odd", "noise_q40", "flat", "optimize", "restart", "progressive",
+])
+def test_batch_matches_single(case):
+    """Every payload of a batch decodes byte-identically to decode_jpeg.
+    Baseline single-scan groups take the lockstep pass; restart-interval,
+    progressive and per-image optimised-table payloads (each its own
+    header signature) take the scalar route."""
+    rng = np.random.default_rng(5)
+    kw = {}
+    lockstep = jb._LOCKSTEP_MIN
+    if case == "scene":
+        img = _scene(31, 48, 48)
+    elif case.startswith("rgb"):
+        img = _rgb()
+        if case.endswith("_odd"):
+            img = img[:33, :41]
+        sub = case[3:6]
+        kw = {"subsample": {"444": False, "420": True, "422": "422"}[sub]}
+    elif case == "band4_odd":
+        base = _scene(77, 41, 23)
+        img = np.concatenate([base, base[:, :, ::-1]], axis=-1)
+    elif case == "noise_q40":
+        img = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)
+        kw = {"quality": 40}
+    elif case == "flat":
+        img = np.full((16, 24), 128, dtype=np.uint8)
+    else:
+        img = _scene(8, 40, 24)
+        kw = {"optimize": {"optimize": True}, "restart": {"restart_interval": 2},
+              "progressive": {"progressive": True}}[case]
+        lockstep = 0
+    payloads = [jb.encode_jpeg(v, **kw) for v in _variants(img)]
+    _assert_batch_identical(payloads, lockstep)
+
+
+def test_batch_optimized_tables_shared():
+    """Optimised tables are per image; payloads that carry the same ones
+    (here: the same image) form a lockstep group like any other."""
+    p = jb.encode_jpeg(_scene(21, 40, 24), optimize=True)
+    _assert_batch_identical([p] * jb._LOCKSTEP_MIN, jb._LOCKSTEP_MIN)
+
+
+def test_batch_crossover_both_sides():
+    """A group one short of _LOCKSTEP_MIN stays scalar; at the minimum the
+    whole group is lockstep.  Different sizes never share a group."""
+    n = jb._LOCKSTEP_MIN
+    a = [jb.encode_jpeg(v) for v in _variants(_scene(2, 24, 16), n)]
+    b = [jb.encode_jpeg(v) for v in _variants(_scene(2, 16, 24), n - 1)]
+    _assert_batch_identical(a[:n - 1], 0)
+    _assert_batch_identical(a, n)
+    _assert_batch_identical(a + b, n)
+    _assert_batch_identical(b + a[:n - 1], 0)
+
+
+def test_batch_split_passes_flushes_and_chunks(monkeypatch):
+    """Small pass, log and assembly budgets split one group into several
+    passes, flush the symbol log many times and assemble pixels in several
+    lane chunks; every payload still decodes byte-identically, with a
+    failing lane in the middle."""
+    n = 3 * jb._LOCKSTEP_MIN + 5
+    pays = [jb.encode_jpeg(v) for v in _variants(_scene(6, 24, 24), n)]
+    nblocks = 2 * 9
+    monkeypatch.setattr(jb, "_LOCKSTEP_BLOCKS", nblocks * (jb._LOCKSTEP_MIN + 4))
+    monkeypatch.setattr(jb, "_LOCKSTEP_FLUSH", 500)
+    monkeypatch.setattr(jb, "_ASSEMBLE_BLOCKS", nblocks * 5)
+    _assert_batch_identical(pays, n)
+    cut = pays[7][:len(pays[7]) - 60] + b"\xff\xd9"
+    got = _lockstep_only(pays[:50] + [cut] + pays[50:])
+    assert sorted(got) == [i for i in range(n + 1) if i != 50]
+    for i, p in enumerate(pays[:50] + [None] + pays[50:]):
+        if p is not None:
+            np.testing.assert_array_equal(got[i], jb.decode_jpeg(p))
+
+
+def test_codecs_decode_batch_mixed_in_input_order():
+    """codecs.decode_batch over PNG, the lossy stand-in and several JPEG
+    kinds (two lockstep groups of different sizes, optimised, restart,
+    progressive), shuffled: every result is codecs.decode's, in order."""
+    n = jb._LOCKSTEP_MIN
+    pays = [jb.encode_jpeg(v) for v in _variants(_scene(3, 32, 24), n)]
+    pays += [jb.encode_jpeg(v, quality=80) for v in _variants(_rgb(20, 28), n)]
+    pays += [jb.encode_jpeg(_scene(4, 40, 24), optimize=True),
+             jb.encode_jpeg(_scene(5, 40, 24), restart_interval=1),
+             jb.encode_jpeg(_scene(6, 40, 24), progressive=True),
+             codecs.encode_png(_scene(7, 20, 12)),
+             codecs.encode_lossy(_scene(8, 12, 20))]
+    order = np.random.default_rng(9).permutation(len(pays))
+    pays = [pays[i] for i in order]
+    got = codecs.decode_batch(pays)
+    assert len(got) == len(pays)
+    for g, p in zip(got, pays):
+        want = codecs.decode(p)
+        assert g.dtype == want.dtype and g.shape == want.shape
+        np.testing.assert_array_equal(g, want)
+    jpeg = [p for p in pays if p[:2] == b"\xff\xd8"]
+    assert len(_lockstep_only(jpeg)) == 2 * n
+
+
+def _malformed(good: bytes) -> dict:
+    sos = good.index(b"\xff\xda")
+    start = sos + 2 + int.from_bytes(good[sos + 2:sos + 4], "big")
+    mid = (start + len(good)) // 2
+    return {
+        "cut_entropy_early_eoi": good[:start + 5] + b"\xff\xd9",
+        "cut_entropy_mid_eoi": good[:mid] + b"\xff\xd9",
+        "cut_entropy_late_eoi": good[:len(good) - 8] + b"\xff\xd9",
+        "cut_entropy_mid": good[:mid],
+        # 32 one-bits (stuffed): no Annex-K code is all ones
+        "invalid_code": good[:mid] + b"\xff\x00\xff\x00" + good[mid:],
+        "cut_header": good[:sos + 3],
+        "cut_soi": good[:1],
+        "dangling_ff": good[:-2] + b"\xff",
+        "garbage_tail": good[:-2] + bytes(range(1, 200, 3)),
+    }
+
+
+def test_batch_malformed_payloads_raise_valueerror():
+    """Truncated, garbage-tailed and Huffman-corrupted payloads inside a
+    lockstep group: the batch raises decode_jpeg's ValueError (never an
+    IndexError); the pass never returns the bad lane, and the lanes around
+    it, which the bad lane might have run into, still decode exactly."""
+    n = jb._LOCKSTEP_MIN
+    good = [jb.encode_jpeg(v) for v in _variants(_scene(12, 32, 32), n)]
+    want = [jb.decode_jpeg(p) for p in good]
+    cases = _malformed(good[0])
+    # Huffman-corrupted: scramble entropy bytes (no new 0xFF: markers stay)
+    rng = np.random.default_rng(17)
+    sos = good[0].index(b"\xff\xda")
+    start = sos + 14
+    for t in range(24):
+        b = bytearray(good[0])
+        for at in rng.integers(start, len(b) - 2, 1 + t % 4):
+            if b[at] != 0xFF and b[at - 1] != 0xFF:
+                b[at] = int(rng.integers(0, 255))
+        cases["huffman_%d" % t] = bytes(b)
+    raised = 0
+    for name, bad in cases.items():
+        batch = good[:n // 2] + [bad] + good[n // 2:]
+        try:
+            single = jb.decode_jpeg(bad)
+        except ValueError:
+            single = None
+        got = _lockstep_only(batch)
+        for i, p in enumerate(batch):
+            if p is not bad:
+                np.testing.assert_array_equal(
+                    got[i], want[i if i < n // 2 else i - 1], err_msg=name)
+        if single is None:
+            raised += 1
+            assert n // 2 not in got, name
+            with pytest.raises(ValueError):
+                jb.decode_jpeg_batch(batch)
+        else:  # a corruption that still decodes: same pixels both ways
+            np.testing.assert_array_equal(
+                jb.decode_jpeg_batch(batch)[n // 2], single, err_msg=name)
+    assert raised >= len(_malformed(good[0])) + 5
+
+
+def _crafted(side: int, ac_syms: tuple, entropy: bytes) -> bytes:
+    """side x side grayscale baseline JPEG with hand-made tables: DC codes
+    '0' -> 0 and '1' -> 1 bit of difference, AC codes '0' and '1' ->
+    ``ac_syms``.  Both codes are complete (every bit string decodes), so
+    a lane that read into padding or a neighbour's bits would decode
+    instead of failing."""
+    bits = bytes([2] + [0] * 15)
+    return (b"\xff\xd8"
+            + b"\xff\xdb\x00\x43\x00" + bytes([1] * 64)
+            + b"\xff\xc0\x00\x0b\x08" + side.to_bytes(2, "big") * 2
+            + b"\x01\x01\x11\x00"
+            + b"\xff\xc4\x00\x28\x00" + bits + b"\x00\x01"
+            + b"\x10" + bits + bytes(ac_syms)
+            + b"\xff\xda\x00\x08\x01\x01\x00\x00\x3f\x00"
+            + entropy + b"\xff\xd9")
+
+
+def test_batch_lane_overrun_never_reaches_output():
+    """With complete codes, only the segment end stops a lane whose bits
+    run out, and only the block-end check stops an AC run past the last
+    block: both lanes must fail (decode_jpeg's ValueError) and leave every
+    neighbour's pixels exact."""
+    n = jb._LOCKSTEP_MIN
+    rng = np.random.default_rng(23)
+    # 16x16 (4 blocks), AC {EOB, run 0 size 1}: one byte is too few bits
+    good = [_crafted(16, (0x00, 0x01), bytes(rng.integers(0, 255, 40).tolist()))
+            for _ in range(n)]
+    short = _crafted(16, (0x00, 0x01), b"\xfe")
+    # 8x8 (1 block), AC {EOB, run 15 size 1}: four runs pass coefficient 63
+    good += [_crafted(8, (0x00, 0xF1), bytes([0x00, k])) for k in range(n)]
+    overrun = _crafted(8, (0x00, 0xF1), b"\x7f\xfe")
+    for bad in (short, overrun):
+        with pytest.raises(ValueError):
+            jb.decode_jpeg(bad)
+        for at in (0, n // 2, n, 2 * n):
+            batch = good[:at] + [bad] + good[at:]
+            got = _lockstep_only(batch)
+            assert sorted(got) == [i for i in range(2 * n + 1) if i != at]
+            for i, p in enumerate(batch):
+                if i != at:
+                    np.testing.assert_array_equal(got[i], jb.decode_jpeg(p))
+            with pytest.raises(ValueError):
+                jb.decode_jpeg_batch(batch)
+
+
+# ---------------------------------------------------------------------------
 # Synth-population gate + Spark plumbing
 # ---------------------------------------------------------------------------
 
@@ -645,6 +906,49 @@ def test_cube_from_real_jpeg_payloads(spark):
             g = r[band]
             assert (np.isnan(w) and (g is None or np.isnan(g))) or g == w, (
                 r["it"], r["iy"], r["ix"], band, g, w)
+
+
+def test_cube_scan_batch_decode_equals_per_image(spark):
+    """With the default decode_fn, build_cube's scan decodes an Arrow batch
+    of same-header JPEGs in one lockstep pass; the cube equals the one a
+    custom decode_fn builds image by image, and that custom decode_fn is
+    still called exactly once per image."""
+    import pandas as pd
+
+    from gdalcubes_cpp_spark.operators.build import build_cube
+    from gdalcubes_cpp_spark.view import CubeView
+
+    n = jb._LOCKSTEP_MIN + 8
+    payloads = [jb.encode_jpeg(v) for v in _variants(_scene(40, 48, 48), n)]
+    assert len(_lockstep_only(payloads)) == n
+    rows = [{
+        "image_id": "b%03d" % k, "bytes": p, "fmt": "jpeg",
+        "ts": pd.Timestamp("2020-01-03") + pd.Timedelta(days=9 * k),
+        "left": -12.0 + 0.03 * k, "right": -8.0 + 0.03 * k,
+        "bottom": 18.0, "top": 22.0,
+    } for k, p in enumerate(payloads)]
+    # one partition, so the scan sees all n payloads in one Arrow batch
+    images = spark.createDataFrame(pd.DataFrame(rows)).coalesce(1)
+    v = CubeView.create(
+        left=-12.0, right=-6.5, bottom=18.0, top=22.0, nx=22, ny=16,
+        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+        aggregation="mean", resampling="near", chunk_size=(2, 8, 11),
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    def per_image(data, fmt):
+        calls.add(1)
+        return codecs.decode(data, fmt)
+
+    def cells(decode_fn=None):
+        kw = {} if decode_fn is None else {"decode_fn": decode_fn}
+        cube = build_cube(images, v, bands=("B1", "B2"), **kw)
+        return sorted(tuple(r) for r in cube.df.collect())
+
+    batched = cells()
+    single = cells(per_image)
+    assert calls.value == n
+    assert batched == single and len(batched) > 0
 
 
 def test_spark_mapinpandas_decode(spark):
