@@ -17,6 +17,13 @@ __all__ = [
     "read_chunks", "write_cube",
 ]
 
+from ._worker import guard_zip_invalidation as _guard_zip_invalidation
+
+# every engine UDF unpickles into package modules, so a Spark Python worker
+# runs this on its first task and keeps the guard for every later task it
+# is reused for; a no-op on the driver and in stream_exec children
+_guard_zip_invalidation()
+
 
 def __getattr__(name):  # lazy: avoid importing Spark-heavy modules eagerly.
     # EVERY public name resolves on first touch (PEP 562), including Cube/

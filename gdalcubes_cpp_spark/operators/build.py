@@ -734,27 +734,31 @@ def build_cells(
             LON, LAT = _srs.grid_to_wgs84(xs, ys, view.srs)
             x_edges = y_edges = None
 
-        # reference (image_id, descriptor) order, numerically: sort by
-        # (len, id) — equals numeric order for fixed-prefix decimal ids of
-        # ANY length, not just zero-padded ones (first/last determinism,
-        # src/image_collection_cube.cpp:327)
-        pdf = pdf.assign(_idlen=pdf["image_id"].str.len()).sort_values(
-            ["_idlen", "image_id"], kind="mergesort"
-        ).drop(columns=["_idlen"])
+        # reference (image_id, descriptor) order, numerically: one stable
+        # sort by (len, id) — equals numeric order for fixed-prefix decimal
+        # ids of ANY length, not just zero-padded ones (first/last
+        # determinism, src/image_collection_cube.cpp:327)
+        ids = pdf["image_id"].to_numpy()
+        order = np.lexsort((ids, np.fromiter(map(len, ids), np.int64, len(ids))))
+
+        def column(name):
+            # pulled once, in kernel order — pandas row access inside the
+            # loop is ~100x slower
+            return pdf[name].to_numpy()[order]
+
         agg = _make_agg(agg_method, (nb, nt_c, ny_c, nx_c))
-        # pull columns once — pandas row access inside the loop is ~100x slower
-        a_ts = pdf["ts"].to_numpy()
-        a_l = pdf["left"].to_numpy()
-        a_r = pdf["right"].to_numpy()
-        a_b = pdf["bottom"].to_numpy()
-        a_t = pdf["top"].to_numpy()
-        a_id = pdf["image_id"].to_numpy()
+        a_ts = column("ts")
+        a_l = column("left")
+        a_r = column("right")
+        a_b = column("bottom")
+        a_t = column("top")
+        a_id = ids[order]
         if value_fn is None:
-            a_bytes = pdf["bytes"].to_numpy()
-            a_fmt = pdf["fmt"].to_numpy()
-        a_mb = pdf["m_bytes"].to_numpy() if "m_bytes" in pdf.columns else None
-        a_mf = pdf["m_fmt"].to_numpy() if "m_fmt" in pdf.columns else None
-        a_mv = pdf["m_val"].to_numpy() if "m_val" in pdf.columns else None
+            a_bytes = column("bytes")
+            a_fmt = column("fmt")
+        a_mb = column("m_bytes") if "m_bytes" in pdf.columns else None
+        a_mf = column("m_fmt") if "m_fmt" in pdf.columns else None
+        a_mv = column("m_val") if "m_val" in pdf.columns else None
         for k in range(len(pdf)):
             itg = view.slot_index_of(pd.Timestamp(a_ts[k]).to_pydatetime())
             itl = itg - it0

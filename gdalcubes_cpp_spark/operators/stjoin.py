@@ -30,6 +30,8 @@ Two physical strategies (method='auto' picks by chunk count):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import cells as C
@@ -185,50 +187,38 @@ def st_join(
     deg = cell_deg or max(
         grid.view.dx * grid.view.chunk_nx, grid.view.dy * grid.view.chunk_ny
     )
+    own_x = F.greatest(F.col("left"), F.col("ch_left"))
+    own_y = F.greatest(F.col("bottom"), F.col("ch_bottom"))
     if method == "s2":
         from ..functions import s2 as s2m
 
         level = s2m.level_for_deg(deg)
         cov = s2m.cover_cells_udf(level)
-
-        def owner(joined):
-            # numpy batch leaf + native parent bit-mask: the owner id is a
-            # join-internal key, and the native s2_cell_id fold evaluates
-            # interpreted (~1 ms/joined row, codegen blocked by its
-            # higher-order binding); np_point_leaf is the py_cell_id-pinned
-            # batch twin the cover side already uses
-            leaf = s2m.point_leaf_udf()(
-                F.greatest(F.col("left"), F.col("ch_left")),
-                F.greatest(F.col("bottom"), F.col("ch_bottom")))
-            return joined, s2m.s2_parent(leaf, level), ()
+        # numpy batch leaf + native parent bit-mask: the owner id is a
+        # join-internal key, and the native s2_cell_id fold evaluates
+        # interpreted (~1 ms/joined row, codegen blocked by its
+        # higher-order binding); np_point_leaf is the py_cell_id-pinned
+        # batch twin the cover side already uses
+        owner_col = s2m.s2_parent(s2m.point_leaf_udf()(own_x, own_y), level)
     elif method == "hex":
         from ..functions import hexgrid as hgm
 
         res = hgm.res_for_deg(deg)
         cov = hgm.cover_cells_udf(res)
-
-        def owner(joined):
-            owned = hgm.hex_cells(
-                joined.withColumn("_own_x", F.greatest(F.col("left"), F.col("ch_left")))
-                .withColumn("_own_y", F.greatest(F.col("bottom"), F.col("ch_bottom"))),
-                "_own_x", "_own_y", res, cell_col="_own_cell", parent_col=None,
-            )
-            return owned, F.col("_own_cell"), ("_own_x", "_own_y", "_own_cell")
+        owner_col = _hex_owner_col(spark.sparkContext.applicationId, res)
     elif method == "cells":
         def cov(lo, hi, blo, bhi):
             return C.cover_cells(lo, hi, blo, bhi, deg)
 
-        def owner(joined):
-            return joined, C.cell_id(
-                F.greatest(F.col("left"), F.col("ch_left")),
-                F.greatest(F.col("bottom"), F.col("ch_bottom")), deg), ()
+        owner_col = C.cell_id(own_x, own_y, deg)
     else:
         raise ValueError(f"unknown method {method!r}")
 
     if method in ("s2", "hex"):
-        # narrow metadata rows: make sure the Arrow cover stage sees every
-        # core (a small parquet scan may yield fewer splits than cores; the
-        # repartition is a cheap exchange of footprint tuples, never bytes)
+        # make sure the Arrow cover stage sees every core (a small parquet
+        # scan may yield fewer splits than cores). The exchange moves whole
+        # image rows: footprint tuples for a metadata table, but build_cube
+        # passes its image table, so there it moves the encoded payloads too
         par = spark.sparkContext.defaultParallelism
         if images.rdd.getNumPartitions() < par:
             images = images.repartition(par)
@@ -239,9 +229,24 @@ def st_join(
         "cell",
         F.explode(cov(F.col("ch_left"), F.col("ch_right"), F.col("ch_bottom"), F.col("ch_top"))),
     )
-    joined, owner_col, tmp_cols = owner(img_c.join(ch_c, "cell"))
+    joined = img_c.join(ch_c, "cell")
     out = joined.filter(_residual_predicate(joined, joined) & (F.col("cell") == owner_col))
-    return out.drop("cell", *tmp_cols)
+    return out.drop("cell")
+
+
+@functools.lru_cache(maxsize=16)
+def _hex_owner_col(app_id: str, res: int):
+    """Owner-cell Column of st_join(method='hex') at ``res``. Building the
+    let-bound hex_cell_cols tree is one py4j call per Column operation,
+    most of a hex st_join call on the driver (~0.8 of ~1.1 s, 4 vCPU), so
+    it is built once per resolution; the cache key carries the live
+    SparkContext's application id, so a restarted session never reuses a
+    Column built against a stopped one."""
+    from ..functions import hexgrid as hgm
+
+    return hgm.hex_cell_cols(
+        F.greatest(F.col("left"), F.col("ch_left")),
+        F.greatest(F.col("bottom"), F.col("ch_bottom")), res)["cell"]
 
 
 def assignment(images: DataFrame, grid: ChunkGrid, **kw) -> DataFrame:

@@ -220,6 +220,73 @@ def test_stjoin_hex_matches_broadcast(spark):
     assert a == b and len(a) > 0
 
 
+def _range_meta(spark, n=600):
+    """Image footprints over V_ENG (images_meta's arithmetic on 1..n)."""
+    from pyspark.sql import functions as F
+
+    k = F.col("id") + 1
+    left = F.lit(-50.0) + (k * 7919 % 9000) / 100.0
+    bottom = F.lit(-40.0) + (k * 6271 % 7200) / 100.0
+    return spark.range(n).select(
+        F.lpad(k.cast("string"), 10, "0").alias("image_id"),
+        left.alias("left"),
+        (left + 0.55 + (k * 104729 % 200) / 100.0).alias("right"),
+        bottom.alias("bottom"),
+        (bottom + 0.55 + (k * 7127 % 200) / 100.0).alias("top"),
+        F.timestamp_seconds(F.lit(788918400) + k * 86400 * 7 % 200_000_000)
+        .alias("ts"),
+    )
+
+
+def test_stjoin_hex_owner_built_once_per_context(spark):
+    """The owner-cell Column is built once per (SparkContext, res): a
+    second st_join reuses it, and another context's id never does."""
+    from gdalcubes_cpp_spark.benchqueries import V_ENG
+    from gdalcubes_cpp_spark.grid import ChunkGrid
+    from gdalcubes_cpp_spark.operators import stjoin
+
+    img = _range_meta(spark)
+    grid = ChunkGrid(V_ENG)
+    stjoin._hex_owner_col.cache_clear()
+    stjoin.st_join(img, grid, method="hex")
+    stjoin.st_join(img, grid, method="hex")
+    info = stjoin._hex_owner_col.cache_info()
+    assert (info.misses, info.hits) == (1, 1)
+    app = spark.sparkContext.applicationId
+    assert stjoin._hex_owner_col(app, RES) is stjoin._hex_owner_col(app, RES)
+    assert (stjoin._hex_owner_col(app + "-restarted", RES)
+            is not stjoin._hex_owner_col(app, RES))
+
+
+def test_stjoin_hex_codegen_within_method_limit(spark):
+    """The owner filter compiles in whole-stage codegen with every method
+    under janino's 64 KB limit (the let-bound tree stays linear), and the
+    join still equals the broadcast one."""
+    import contextlib
+    import io
+    import re
+
+    from gdalcubes_cpp_spark.benchqueries import V_ENG
+    from gdalcubes_cpp_spark.grid import ChunkGrid
+    from gdalcubes_cpp_spark.operators.stjoin import assignment
+
+    img = _range_meta(spark)
+    grid = ChunkGrid(V_ENG)
+    joined = assignment(img, grid, method="hex")
+    buf = io.StringIO()
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # static plan
+    try:
+        with contextlib.redirect_stdout(buf):
+            joined.explain("codegen")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(-?\d+)", buf.getvalue())]
+    assert sizes and all(0 < n < 65536 for n in sizes), sizes
+    want = set(assignment(img, grid, method="broadcast").collect())
+    assert want and set(joined.collect()) == want
+
+
 def test_polyfill_center_containment():
     """polyfill = cells whose CENTER is inside the polygon (H3 semantics):
     every returned cell's center passes the independent ray-cast; no
